@@ -42,13 +42,10 @@ Spark ≈ 43-44s vs oracle ≈ 32-65s → ratio ≈ 0.68-1.15 at sf0.1
 across repeated full runs (the oracle side swings harder with host
 CPU-steal — its recursive-CTE clusters/semantic-dedup oracles are
 memory-heavy — so the two sides rarely catch the same noise window;
-round 3 was 1.4-1.8 before the floor/fan-out work; round 5's seeded
-adaptive-batch connected components measure 0.68s seeded vs 1.26s
-unseeded at sf0.1 — same session, same materialized pair input, one
-flag, ``tools/cc_ab.py`` — against an 18s-class recursive-CTE oracle;
-an earlier "18.8s → 0.6s" claim here paired a DuckDB oracle number
-with a Spark number across rounds and is retracted). The remaining gap
-is almost entirely structural, not per-operator: (a) Spark's per-job
+round 3 was 1.4-1.8 before the floor/fan-out work; an earlier
+"18.8s → 0.6s" connected-components claim here paired a DuckDB oracle
+number with a Spark number across rounds and is retracted). The
+remaining gap is almost entirely structural, not per-operator: (a) Spark's per-job
 floor — ~0.12s/query even for ``spark.range(1).count()`` with
 ``spark.locality.wait=0``, ≈ 11s across 97 queries, scheduler/stage
 setup that DuckDB's ~5ms floor doesn't pay and that amortizes away at

@@ -42,17 +42,10 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = CC_MAX_ITER,
-    seeded: bool = True,
 ) -> DataFrame:
     """Label each node of the undirected ``edges`` graph with the minimum
     node id reachable from it. Output: (doc_id, cluster_id), one row per
     node that appears in at least one edge.
-
-    ``seeded=False`` initializes labels to the identity (each node its
-    own label) instead of the min(self ∪ neighbors) aggregate — the
-    pre-optimization shape, kept ONLY so ``tools/cc_ab.py`` can measure
-    seeded vs unseeded in one session (same data, same JVM). Production
-    callers always use the default.
 
     Raises ``RuntimeError`` if the fixpoint is not reached in ``max_iter``
     rounds — a diameter that large means the input is not a dedup graph
@@ -92,7 +85,7 @@ def connected_components(
     loop_confs = {"spark.sql.adaptive.enabled": "false"} if tiny else {}
 
     with scoped_sql_conf(spark, loop_confs):
-        # CO-PARTITIONED, SORTED ITERATION STATE (round 12): edges are
+        # CO-PARTITIONED, SORTED ITERATION STATE: edges are
         # checkpointed hash-partitioned AND sorted on the join side `v`;
         # every label frame is produced (and re-checkpointed) partitioned on
         # `node` with the same partition count. Both joins in a propagation
@@ -121,35 +114,16 @@ def connected_components(
         # instead of three, no action. For LSH candidate graphs this alone
         # finishes most components: every band bucket emits a clique, and a
         # clique converges at round 1 (everyone sees the bucket minimum).
-        if seeded:
-            # NOT checkpointed: the seed aggregate's output is already
-            # hash-partitioned on u(=node) at the loop DOP, so batch 0's
-            # propagation fuses with it into ONE job — materializing the
-            # seed separately would buy nothing (batch 0's checkpoint
-            # cuts the lineage) and cost one more scheduler round trip.
-            labels = (
-                sym.groupBy("u")
-                .agg(F.least(F.min("v"), F.first("u")).alias("lbl"))
-                .select(F.col("u").alias("node"), "lbl")
-            )
-        else:  # identity labels: measurement-only baseline (see docstring)
-            # lbl is aliased ABOVE the checkpoint, not below it: with
-            # `select(node, node AS lbl)` under the checkpoint, both
-            # output attributes map from ONE source attribute and the
-            # LogicalRDD attribute rewrite reports the partitioning on
-            # the twin (`hashpartitioning(lbl)`), so every propagate
-            # round silently re-exchanged+re-sorted the label side
-            # (found by tests/test_graph.py's plan-shape guard). A
-            # Project over the checkpoint preserves the node
-            # partitioning/ordering and costs nothing.
-            labels = (
-                sym.select(F.col("u").alias("node"))
-                .distinct()
-                .repartition(dop, F.col("node"))
-                .sortWithinPartitions("node")
-                .localCheckpoint(eager=True)
-                .select("node", F.col("node").alias("lbl"))
-            )
+        # NOT checkpointed: the seed aggregate's output is already
+        # hash-partitioned on u(=node) at the loop DOP, so batch 0's
+        # propagation fuses with it into ONE job — materializing the
+        # seed separately would buy nothing (batch 0's checkpoint cuts
+        # the lineage) and cost one more scheduler round trip.
+        labels = (
+            sym.groupBy("u")
+            .agg(F.least(F.min("v"), F.first("u")).alias("lbl"))
+            .select(F.col("u").alias("node"), "lbl")
+        )
 
         def propagate(lbls: DataFrame) -> DataFrame:
             # merge-join hint: both sides are co-partitioned AND sorted

@@ -546,17 +546,9 @@ def _drain_stream(
 
     shm = "/dev/shm"
     fast = shm if os.path.isdir(shm) and os.access(shm, os.W_OK) else None
-    # A/B hooks (tools/stream_ab.py): neither changes results — the
-    # provider only decides where state lives (see STATE_PROVIDERS), the
-    # partition count only how state is sharded. The partition default
-    # stays the measured sf0.1 knee; the env lets the A/B tool re-find
-    # the knee at bigger fixtures without touching the declared path.
     # input-sized state partitions: the passed value is the FLOOR (the
     # per-query sf0.1 knee); bigger inputs scale up at ~12 MiB/partition
     drain_partitions = _drain_partitions_for(spark, sf_dir, drain_partitions)
-    env_parts = os.environ.get("SPARK_GRAFT_DRAIN_PARTITIONS")
-    if env_parts:
-        drain_partitions = int(env_parts)
     with tempfile.TemporaryDirectory(dir=fast) as ckpt:
         run_stream_to_memory(
             stream,
@@ -564,7 +556,6 @@ def _drain_stream(
             ckpt,
             output_mode=output_mode,
             drain_partitions=drain_partitions,
-            state_provider=os.environ.get("SPARK_GRAFT_STATE_PROVIDER"),
         )
     return spark.table(table)
 

@@ -246,109 +246,16 @@ def rebalance_for_cpu(df, key: str, target: int | None = None):
     return df.repartition(target, F.col(key))
 
 
-#: The one live scoped-cache entry (see persist_scoped). Single-slot by
-#: design: harnesses execute each built query before building the next,
-#: so one slot covers the live query and bounds cache memory to one plan;
-#: an evicted plan that is re-executed simply recomputes (slower, still
-#: correct).
-_LIVE_CACHE: list = []
-
-
-def _victim_is_connect(victim) -> bool | None:
-    """Whether ``victim``'s owning session is Connect-backed; ``None``
-    when the session itself is unreachable (e.g. a torn-down classic
-    frame whose ``sparkSession`` accessor raises)."""
-    try:
-        return type(victim.sparkSession).__module__.startswith(
-            "pyspark.sql.connect"
-        )
-    except Exception:
-        return None
-
-
-def _stopped_context_error(exc: BaseException, victim=None) -> bool:
-    """True iff ``exc`` carries one of the KNOWN stopped-session
-    signatures (classic PySpark tearing down the py4j gateway mid-call).
-    Anything else — a Connect-style session raising on ``sparkContext``,
-    a transient RPC hiccup — is NOT proof of death, and treating it as
-    such would silently skip unpersist on live sessions and leak the
-    executor-memory slot (round-6 ADVICE)."""
-    # py4j does NOT embed the class name in str(exc) — a dead gateway
-    # raises Py4JNetworkError("Error while sending or receiving" / "An
-    # error occurred while trying to connect to the Java server") — so a
-    # network-dead gateway is recognized by TYPE, and the message
-    # patterns cover the JVM-side signatures that arrive as other types.
-    if type(exc).__name__ == "Py4JNetworkError":
-        return True
-    s = str(exc)
-    if any(
-        p in s
-        for p in (
-            "stopped SparkContext",
-            "Py4JNetworkError",
-            "Answer from Java side is empty",
-            "Java gateway process",
-            "Error while sending or receiving",
-            "trying to connect to the Java server",
-        )
-    ):
-        return True
-    # "'JavaPackage' object is not callable" arrives as a plain TypeError
-    # both when the gateway is torn down (jvm views degrade to JavaPackage
-    # placeholders) AND on a perfectly live session that merely references
-    # a JVM class missing from the classpath — the message alone cannot
-    # tell them apart, and classifying the live case as dead would leak
-    # the persisted slot (round-8 ADVICE: match on exception class, not
-    # bare substring). Require independent evidence of death: no active
-    # SparkContext left in this process.
-    if isinstance(exc, TypeError) and "JavaPackage" in s:
-        from pyspark import SparkContext
-
-        if SparkContext._active_spark_context is not None:
-            return False
-        # No classic SparkContext in this process. Scope the remaining
-        # evidence to the VICTIM when one is provided (review finding:
-        # process-wide "a Connect session exists somewhere" suppressed
-        # dead-classic classification in a mixed classic+Connect
-        # process, re-raising on eviction of a genuinely dead classic
-        # frame):
-        #   * victim known CLASSIC  → JavaPackage + no classic context
-        #     is exactly the torn-down-py4j-gateway signature → dead;
-        #   * victim known CONNECT  → its ops never route through py4j,
-        #     so this error is a missing-JVM-class artifact on a live
-        #     session, not death (round-9 ADVICE).
-        if victim is not None:
-            is_connect = _victim_is_connect(victim)
-            if is_connect is not None:
-                return not is_connect
-        # No victim (or its session is unreachable): fall back to
-        # process-level evidence — absence of a classic context is only
-        # death if no live Connect session could own the frame either.
-        # Connect is an optional install (grpcio); if its module cannot
-        # import, no Connect session can exist here.
-        try:
-            from pyspark.sql.connect.session import (
-                SparkSession as _ConnectSession,
-            )
-        except Exception:
-            return True
-        try:
-            if (
-                _ConnectSession.getActiveSession() is not None
-                or _ConnectSession._default_session is not None
-            ):
-                return False
-        except Exception:
-            # a broken Connect probe proves nothing either way; fall
-            # through to the no-context-anywhere conclusion
-            pass
-        return True
-    return False
+#: Attribute under which :func:`persist_scoped` keeps its FIFO of live
+#: scoped-persisted frames. Stored ON the session object, like the
+#: :func:`memo_df` memo: every evicted frame belongs to the same session
+#: as the frame being persisted, and the slots die with the session.
+_PERSIST_ATTR = "_fbde4_persist_slots"
 
 
 def persist_scoped(df, slots: int = 2):
-    """Persist ``df``, evicting the oldest scoped-persisted plan beyond
-    ``slots`` live entries.
+    """Persist ``df``, evicting the oldest scoped-persisted plan of the
+    same session beyond ``slots`` live entries.
 
     For operators whose expensive map stage feeds BOTH branches of a
     self-join (LSH band rows, IVF cell assignments): Spark does not share
@@ -356,49 +263,31 @@ def persist_scoped(df, slots: int = 2):
     signature expression computes once per branch. Persisting the
     exploded rows makes it once total — and the bounded eviction keeps
     repeated invocations (bench: 4× per query) from accumulating
-    session-lifetime cache.
+    session-lifetime cache. An evicted plan that is re-executed simply
+    recomputes (slower, still correct).
 
     Two slots, not one: composed operators nest scoped persists one level
     deep (triangle_count persists the edge list whose *plan* reads the
     persisted LSH signatures; persistence is lazy, so a single slot would
     evict the inner cache before the outer plan ever materializes it —
-    observed 2× signature recompute, 5.2s vs 2.3s at sf0.1)."""
-    while len(_LIVE_CACHE) >= slots:
-        # the cache is process-global, so an evicted entry may belong to
-        # a session that has since been STOPPED — unpersist would then
-        # raise on the dead SparkContext and abort a perfectly valid new
-        # query. A dead plan's cache is already gone; just drop the ref.
-        # The guard is NARROW (round-6 ADVICE): only the dead-session
-        # case is swallowed; a genuine unpersist failure on a live
-        # session (e.g. transient RPC error) propagates, because
-        # silencing it would leak the executor-memory slot with no
-        # signal.
-        victim = _LIVE_CACHE.pop(0)
+    observed 2× signature recompute, 5.2s vs 2.3s at sf0.1).
+
+    A failing ``unpersist`` of an evicted frame propagates: swallowing it
+    would leak the executor-memory slot with no signal. When the session
+    object rejects attributes (slotted/proxied sessions) ``df`` is
+    returned unpersisted, the same fallback as :func:`memo_df`."""
+    spark = df.sparkSession
+    live = getattr(spark, _PERSIST_ATTR, None)
+    if live is None:
+        live = []
         try:
-            sc = victim.sparkSession.sparkContext
-            dead = sc._jsc is None or sc._jsc.sc().isStopped()
-        except Exception as exc:
-            # A failing probe does NOT prove the session is dead: on a
-            # Connect-style session `sparkContext` itself raises while
-            # unpersist works fine, and classifying that as dead would
-            # leak the slot on every eviction (round-6 ADVICE). Only the
-            # known stopped-context signatures count as dead; anything
-            # else falls through to the unpersist below, which either
-            # succeeds or reports a real failure.
-            dead = _stopped_context_error(exc, victim)
-        if not dead:
-            try:
-                victim.unpersist()
-            except Exception as exc:
-                # self-correcting misclassification: a session that died
-                # between probe and unpersist raises the same stopped-
-                # context signature here — its cache is already gone.
-                # Any other failure propagates (a swallowed live-session
-                # failure would leak the slot with no signal).
-                if not _stopped_context_error(exc, victim):
-                    raise
+            setattr(spark, _PERSIST_ATTR, live)
+        except Exception:  # pragma: no cover - slotted/proxied sessions
+            return df
+    while len(live) >= slots:
+        live.pop(0).unpersist()
     df = df.persist()
-    _LIVE_CACHE.append(df)
+    live.append(df)
     return df
 
 
@@ -417,10 +306,6 @@ _MEMO_ATTR = "_fbde4_df_memo"
 _SHUFFLE_TUNE_BYTES_PER_PARTITION = 4 * 1024 * 1024
 _SHUFFLE_TUNE_MIN_PARTITIONS = 4
 _SHUFFLE_TUNE_MEMO_ATTR = "_fbde4_shuffle_tune_memo"
-#: First-touch snapshot of the confs tune_shuffle_for_input rewrites,
-#: so restore_session_tuning can hand a mixed-use session back its own
-#: values (round-13 ADVICE).
-_TUNE_ORIGINALS_MEMO_ATTR = "_fbde4_tune_originals"
 #: Input size below which the session runs queries with AQE OFF — the
 #: same planner-grade "statistically tiny" threshold the CC loop uses
 #: for its own actions (operators/graph.py): under it, every stage's
@@ -462,8 +347,8 @@ def input_dir_bytes(spark: SparkSession, sf_dir: str) -> int | None:
 
 
 def tune_shuffle_for_input(spark: SparkSession, sf_dir: str) -> None:
-    """Input-statistics-driven shuffle DOP + execution regime (round-12
-    VERDICT #1/#2). Two session knobs keyed to the scale directory's
+    """Input-statistics-driven shuffle DOP + execution regime. Two
+    session knobs keyed to the scale directory's
     parquet byte count: the pre-AQE shuffle-partition ceiling, and —
     below :data:`_AQE_OFF_INPUT_BYTES` — adaptive execution itself
     (tiny inputs pay one scheduler job per AQE-materialized exchange
@@ -492,7 +377,7 @@ def tune_shuffle_for_input(spark: SparkSession, sf_dir: str) -> None:
     DIFFERENT scale dirs (the scale-trend harness) must each plan at
     their own input's DOP.
 
-    DISCLOSED session-global semantics (round-12 ADVICE): the conf is
+    DISCLOSED session-global semantics: the conf is
     LAST-WRITER-WINS on the session. A single plan that joins tables
     loaded from two different scale dirs plans at whichever directory
     loaded last — acceptable because the value is a pre-AQE *ceiling*
@@ -500,26 +385,12 @@ def tune_shuffle_for_input(spark: SparkSession, sf_dir: str) -> None:
     mode is bounded extra tasks, never wrong results), and every
     declared query loads from exactly one dir. The setting also stands
     for later non-load work on the session until the next load
-    re-asserts it — same bounded-cost argument for the DOP; for the
-    AQE regime flip the radius is wider (round-13 ADVICE: after a tiny
-    load, ad-hoc non-engine queries at scale would lose skew
-    handling/coalescing), so the PRE-TUNING originals are recorded at
-    first touch and :func:`restore_session_tuning` hands them back —
-    the escape hatch for a session interleaving engine loads with its
-    own ad-hoc work. Callers that need a pinned DOP scope it (see
-    ``scoped_sql_conf`` / ``_drain_shuffle_partitions``, which keep
-    streaming drains unaffected).
+    re-asserts it — same bounded-cost argument for the DOP; the AQE
+    regime flip has a wider radius (after a tiny load, ad-hoc
+    non-engine queries at scale lose skew handling/coalescing until the
+    next load). Callers that need a pinned conf scope it with
+    :func:`scoped_sql_conf`, which keeps streaming drains unaffected.
     """
-    originals = session_memo(spark, _TUNE_ORIGINALS_MEMO_ATTR)
-    if originals is not None and not originals:
-        for key in (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.adaptive.enabled",
-        ):
-            try:
-                originals[key] = spark.conf.get(key)
-            except Exception:  # pragma: no cover - odd builds
-                pass
     memo = session_memo(spark, _SHUFFLE_TUNE_MEMO_ATTR)
     n = memo.get(sf_dir) if memo is not None else None
     if n is None:
@@ -540,8 +411,8 @@ def tune_shuffle_for_input(spark: SparkSession, sf_dir: str) -> None:
     try:
         if spark.conf.get("spark.sql.shuffle.partitions") != str(dop):
             spark.conf.set("spark.sql.shuffle.partitions", str(dop))
-        # Execution-regime half of the same policy (round-12 VERDICT #2,
-        # generalizing the CC loop's tiny-graph regime to every query):
+        # Execution-regime half of the same policy (the CC loop's
+        # tiny-graph regime, generalized to every query):
         # below ~64 MB of input, adaptive re-planning buys nothing — the
         # data cost per stage is sub-scheduler-floor — but it CHARGES one
         # scheduler job per materialized exchange (every broadcast build
@@ -558,23 +429,6 @@ def tune_shuffle_for_input(spark: SparkSession, sf_dir: str) -> None:
             spark.conf.set("spark.sql.adaptive.enabled", want_aqe)
     except Exception:  # pragma: no cover - conf set on odd builds
         pass
-
-
-def restore_session_tuning(spark: SparkSession) -> None:
-    """Hand the session back the shuffle-DOP / AQE conf values it had
-    BEFORE the first :func:`tune_shuffle_for_input` touch (round-13
-    ADVICE: the tuning's last-writer-wins AQE flip otherwise stands for
-    ad-hoc non-engine work until the next load re-asserts it — a
-    session that interleaves engine loads with its own scale queries
-    calls this between the two). No-op when tuning never ran. The
-    per-directory statistics memo is kept: a later engine load re-tunes
-    from it without re-walking the directory."""
-    originals = getattr(spark, _TUNE_ORIGINALS_MEMO_ATTR, None)
-    for key, value in (originals or {}).items():
-        try:
-            spark.conf.set(key, value)
-        except Exception:  # pragma: no cover - conf set on odd builds
-            pass
 
 
 @contextmanager

@@ -17,28 +17,14 @@ late data beyond the watermark is dropped deterministically.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from financial_big_data_exp_4_spark.functions.core import floor_div_sql
-from financial_big_data_exp_4_spark.session import ensure_session_confs
-
-
-@contextmanager
-def _drain_shuffle_partitions(spark: SparkSession, n: int | None):
-    """Temporarily size the stateful-shuffle (= state store) partition
-    count for a bounded drain, restoring the session conf after. One
-    place, not three: every drain helper shares the same save/set/restore
-    discipline (``None`` = leave the session value alone)."""
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    if n is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+from financial_big_data_exp_4_spark.session import (
+    ensure_session_confs,
+    scoped_sql_conf,
+)
 
 
 def read_events_stream(
@@ -276,84 +262,22 @@ def streaming_distinct_keys(
     return events.select(*cols).dropDuplicates(list(cols))
 
 
-#: State-store provider class names for the drain harness's
-#: ``state_provider`` knob. ``default`` keeps Spark's HDFS-backed
-#: in-memory store (state lives on-heap, commits write delta files to
-#: the checkpoint); ``rocksdb`` selects the RocksDB provider (state in
-#: native off-heap RocksDB instances, the production choice when
-#: per-partition state exceeds comfortable heap). Measured on the
-#: bounded availableNow drains this harness runs (tools/stream_ab.py,
-#: 10× fixture): RocksDB adds per-partition instance startup + native
-#: file I/O that a /dev/shm-checkpointed in-memory store never pays, so
-#: ``default`` stays the drain default; the knob exists so a deployment
-#: with GB-scale state can flip it per-drain without touching plans.
-STATE_PROVIDERS = {
-    "default": None,
-    "rocksdb": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    ),
-}
-
-
-@contextmanager
-def _drain_state_provider(spark: SparkSession, provider: str | None):
-    """Temporarily pin the state-store provider class for a drain (same
-    save/set/restore discipline as :func:`_drain_shuffle_partitions`).
-    ``None``/"default" leaves the session value alone."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    cls = STATE_PROVIDERS.get(provider or "default")
-    if cls is None:
-        yield
-        return
-    try:
-        saved = spark.conf.get(key)
-    except Exception:
-        saved = None
-    spark.conf.set(key, cls)
-    try:
-        yield
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
-
-
-@contextmanager
-def _drain_no_data_batch(spark: SparkSession, enabled: bool):
-    """Temporarily disable Spark's trailing no-data microbatch for a
-    bounded drain (same save/set/restore discipline as
-    :func:`_drain_shuffle_partitions`). ``enabled=True`` leaves the
-    session value alone."""
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    if enabled:
-        yield
-        return
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, saved)
-
-
 def run_stream_to_memory(
     df: DataFrame,
     query_name: str,
     checkpoint_dir: str,
     output_mode: str = "complete",
-    drain_partitions: int | None = 4,
-    state_provider: str | None = None,
-    no_data_batch: bool = False,
+    drain_partitions: int = 4,
 ) -> None:
     """Drain a bounded stream into the in-memory sink (availableNow) and
     block until done — the test/verification harness for streaming plans.
     Aggregations drain in ``complete`` mode; streaming dedup only
-    supports ``append``/``update``.
+    supports ``append``/``update``. Both drain confs below are scoped
+    (:func:`scoped_sql_conf`): the session gets its own values back
+    after the drain, also when the drain fails.
 
     ``drain_partitions`` sizes the stateful-shuffle (= state store)
-    partition count for the drain and restores the session conf after.
+    partition count for the drain.
     Stateful operators pay per-partition state-store commit + checkpoint
     overhead EVERY microbatch regardless of data volume (a stream-stream
     join keeps four stores per partition), so the partition count must
@@ -366,22 +290,21 @@ def run_stream_to_memory(
     4 → 0.81s, 2 → 0.80s — per-partition store-commit overhead, so the
     default sits at the knee.)
 
-    ``no_data_batch=False`` (default) skips Spark's trailing NO-DATA
-    microbatch. After availableNow ingests the last file, Spark runs one
-    more batch purely to advance the watermark and EVICT state — on the
-    sf0.1 stream-stream join that empty batch costs 2.3 s of the 7 s
-    drain (addBatch re-plan + 4 state stores × partitions committing).
-    Every declared drain emits its full output in the data batches:
-    complete-mode aggregations re-emit everything each batch, append
-    inner joins emit matches as rows arrive, streaming dedup emits on
-    first sight, and the update-mode stateful op emits per batch — so
-    for a bounded drain whose checkpoint is discarded, eviction is pure
-    cost. A test that asserts watermark-eviction behavior itself (or a
-    resumable production drain) passes ``True``."""
-    spark = df.sparkSession
-    with _drain_shuffle_partitions(spark, drain_partitions), \
-            _drain_state_provider(spark, state_provider), \
-            _drain_no_data_batch(spark, no_data_batch):
+    Drains skip Spark's trailing NO-DATA microbatch. After availableNow
+    ingests the last file, Spark runs one more batch purely to advance
+    the watermark and EVICT state — on the sf0.1 stream-stream join that
+    empty batch costs 2.3 s of the 7 s drain (addBatch re-plan + 4 state
+    stores × partitions committing). Every declared drain emits its full
+    output in the data batches: complete-mode aggregations re-emit
+    everything each batch, append inner joins emit matches as rows
+    arrive, streaming dedup emits on first sight, and the update-mode
+    stateful op emits per batch — so for a bounded drain whose
+    checkpoint is discarded, eviction is pure cost."""
+    confs = {
+        "spark.sql.shuffle.partitions": str(drain_partitions),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    }
+    with scoped_sql_conf(df.sparkSession, confs):
         q = (
             df.writeStream.format("memory")
             .queryName(query_name)
@@ -397,7 +320,7 @@ def run_stream_foreach_batch(
     df: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    drain_partitions: int | None = 4,
+    drain_partitions: int = 4,
 ) -> None:
     """Production-sink drain: ``foreachBatch`` writing each microbatch to
     a **batch-id-keyed parquet directory with overwrite** — the standard
@@ -416,14 +339,14 @@ def run_stream_foreach_batch(
     Same state-store partition sizing contract as
     :func:`run_stream_to_memory`.
     """
-    spark = df.sparkSession
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(
             f"{out_dir}/batch_id={batch_id}"
         )
 
-    with _drain_shuffle_partitions(spark, drain_partitions):
+    confs = {"spark.sql.shuffle.partitions": str(drain_partitions)}
+    with scoped_sql_conf(df.sparkSession, confs):
         q = (
             df.writeStream.foreachBatch(_write_batch)
             .outputMode("append")
@@ -484,7 +407,7 @@ def run_stream_merge(
     checkpoint_dir: str,
     key: str,
     cols,
-    drain_partitions: int | None = 4,
+    drain_partitions: int = 4,
     seq_col: str | None = None,
 ) -> None:
     """Streaming CDC apply: maintain an upserted snapshot table from a
@@ -536,7 +459,8 @@ def run_stream_merge(
             f"{out_dir}/v={batch_id + 1}"
         )
 
-    with _drain_shuffle_partitions(spark, drain_partitions):
+    confs = {"spark.sql.shuffle.partitions": str(drain_partitions)}
+    with scoped_sql_conf(spark, confs):
         q = (
             changes.writeStream.foreachBatch(_apply)
             .outputMode("append")

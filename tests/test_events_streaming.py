@@ -753,3 +753,51 @@ def test_streaming_tumbling_rejects_unaligned_width(spark, sf_dir):
         streaming_tumbling_counts(events, width="7 days")
     with _pytest.raises(ValueError, match="unsupported interval"):
         streaming_tumbling_counts(events, width="1 fortnight")
+
+
+def test_drain_restores_session_confs(spark, sf_dir, tmp_path):
+    """run_stream_to_memory scopes its drain confs: shuffle partitions and
+    the no-data-microbatch switch read their pre-drain values after a
+    drain that succeeds and after one whose ``start()`` raises."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from financial_big_data_exp_4_spark.streaming import (
+        read_events_stream,
+        run_stream_to_memory,
+        streaming_distinct_keys,
+    )
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+    saved = {k: spark.conf.get(k) for k in keys}
+    # values the drain does not use, so a missed restore shows
+    before = {keys[0]: "7", keys[1]: "true"}
+    try:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+        stream = streaming_distinct_keys(read_events_stream(spark, sf_dir))
+        run_stream_to_memory(
+            stream,
+            "t_drain_confs",
+            str(tmp_path / "ok"),
+            output_mode="append",
+            drain_partitions=2,
+        )
+        assert spark.table("t_drain_confs").count() > 0
+        assert {k: spark.conf.get(k) for k in keys} == before
+        # complete mode on a non-aggregating stream fails in start()
+        with pytest.raises(AnalysisException):
+            run_stream_to_memory(
+                stream,
+                "t_drain_confs_bad",
+                str(tmp_path / "bad"),
+                output_mode="complete",
+                drain_partitions=2,
+            )
+        assert {k: spark.conf.get(k) for k in keys} == before
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

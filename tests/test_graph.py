@@ -70,13 +70,6 @@ def test_connected_components_chain_and_islands(spark):
         for r in connected_components(edges).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20}
-    # the measurement-only unseeded arm (tools/cc_ab.py) must agree with
-    # the production seeded default on the same graph
-    unseeded = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(edges, seeded=False).collect()
-    }
-    assert unseeded == got
 
 
 def test_connected_components_deep_chain_converges(spark):
@@ -314,13 +307,12 @@ def test_cc_propagate_round_plan_shape_is_exchange_free(spark):
             .sortWithinPartitions("v")
             .localCheckpoint(eager=True)
         )
-        # mid-loop label state, the SEEDED path's shape: the batch-end
-        # checkpoint of an agg-derived (node, lbl) frame — node and lbl
-        # are DISTINCT source attributes here, which matters: an
-        # alias-twin (`select(node, node AS lbl)`) under the checkpoint
-        # makes the LogicalRDD attribute rewrite report the partitioning
-        # on the twin, and the join re-exchanges (the bug this guard
-        # caught in the unseeded baseline path on first run)
+        # mid-loop label state: the batch-end checkpoint of an
+        # agg-derived (node, lbl) frame — node and lbl are DISTINCT
+        # source attributes here, which matters: an alias-twin
+        # (`select(node, node AS lbl)`) under the checkpoint makes the
+        # LogicalRDD attribute rewrite report the partitioning on the
+        # twin, and the join re-exchanges
         labels = (
             sym.groupBy("u")
             .agg(F.least(F.min("v"), F.first("u")).alias("lbl"))
@@ -343,36 +335,6 @@ def test_cc_propagate_round_plan_shape_is_exchange_free(spark):
     assert "BroadcastExchange" not in plan, plan
     assert plan.count("Sort [") == 0, plan
     assert plan.count("Exchange") == 1, plan
-
-
-def test_cc_unseeded_label_checkpoint_reports_node_partitioning(spark):
-    """The unseeded baseline's identity-label checkpoint must report its
-    partitioning on ``node`` (the join key), not on the alias twin
-    ``lbl`` — the alias is projected ABOVE the checkpoint for exactly
-    this reason (see operators/graph.py). Pinned here because the twin
-    misreport silently re-adds a per-round exchange, which only a plan
-    inspection can see."""
-    from pyspark.sql import functions as F
-
-    from financial_big_data_exp_4_spark.session import scoped_sql_conf
-
-    edges = spark.createDataFrame([(1, 2), (2, 3)], ["doc_a", "doc_b"])
-    with scoped_sql_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
-        sym = edges.select(
-            F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-        )
-        labels = (
-            sym.select(F.col("u").alias("node"))
-            .distinct()
-            .repartition(4, F.col("node"))
-            .sortWithinPartitions("node")
-            .localCheckpoint(eager=True)
-            .select("node", F.col("node").alias("lbl"))
-        )
-        part = str(
-            labels._jdf.queryExecution().executedPlan().outputPartitioning()
-        )
-    assert "hashpartitioning(node" in part, part
 
 
 def test_twostar_round_plan_shape_is_pinned(spark):

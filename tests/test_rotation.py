@@ -190,3 +190,47 @@ def test_memo_capacity_has_headroom_over_family_count() -> None:
         f"memo_df max_entries={cap} leaves too little headroom over "
         f"{len(MEMO_FAMILY_CONSUMERS)} registered families"
     )
+
+
+#: The environment variables the engine package reads. Each one is a
+#: deployment setting or has a tool that sets it: SPARK_GRAFT_AQE_OFF_BYTES
+#: (tools/scale_bench.py) and SPARK_GRAFT_MEMO_BYPASS (the
+#: tools/explain_audit.py build-plan pass). An A/B knob read from the
+#: environment outlives the tool that set it; add one here only together
+#: with its caller.
+ENGINE_ENV_READS = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_DRIVER_MEMORY",
+    "SPARK_MASTER",
+    "SPARK_GRAFT_AQE_OFF_BYTES",
+    "SPARK_GRAFT_MEMO_BYPASS",
+}
+
+
+def test_engine_env_reads_are_the_declared_set() -> None:
+    """Every ``environ``/``getenv`` mention under the engine package must
+    be a read of a literal variable name, and the names read must be
+    exactly :data:`ENGINE_ENV_READS`. A mention that is not a literal
+    read (``from os import environ``, a computed name) fails too, since
+    the scrape cannot see what it reads."""
+    pkg = REPO_ROOT / "financial_big_data_exp_4_spark"
+    mention = re.compile(r"\b(?:environ|getenv)\b")
+    literal_read = re.compile(
+        r"""(?:environ(?:\.get\(|\[)|getenv\()\s*["']([A-Za-z0-9_]+)["']"""
+    )
+    names: set[str] = set()
+    opaque: list[str] = []
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        for m in mention.finditer(src):
+            read = literal_read.match(src, m.start())
+            if read:
+                names.add(read.group(1))
+            else:
+                line = src.count("\n", 0, m.start()) + 1
+                opaque.append(f"{path.relative_to(REPO_ROOT)}:{line}")
+    assert not opaque, f"environment access without a literal name: {opaque}"
+    assert names == ENGINE_ENV_READS, (
+        f"undeclared={sorted(names - ENGINE_ENV_READS)} "
+        f"unread={sorted(ENGINE_ENV_READS - names)}"
+    )

@@ -1,10 +1,8 @@
-"""Unit tests for the scoped-persist eviction guard (no Spark needed).
+"""Session-level engine helpers: the scoped-persist FIFO, the
+rebalance guard and the input-sized shuffle tuning.
 
-The eviction path must unpersist live victims and silently drop dead
-ones — and a FAILING liveness probe must not be read as death: on a
-Connect-style session ``sparkContext`` itself raises while unpersist
-works fine, and classifying that as dead leaks the executor-memory slot
-on every eviction (round-6 ADVICE).
+``persist_scoped`` keeps its slots on the session object, so every
+evicted frame belongs to the session that persists the new one.
 """
 
 from __future__ import annotations
@@ -14,168 +12,41 @@ import pytest
 from financial_big_data_exp_4_spark import session as sess
 
 
-class _FakeVictim:
-    """Stands in for a persisted DataFrame being evicted."""
+def test_persist_scoped_evicts_oldest_frame_of_the_session(spark, monkeypatch):
+    """With two slots, persisting a third frame unpersists the first
+    while the other two stay cached; the slot list lives on the
+    session object."""
+    from pyspark import StorageLevel
 
-    def __init__(self, probe_exc=None, unpersist_exc=None):
-        self._probe_exc = probe_exc
-        self._unpersist_exc = unpersist_exc
-        self.unpersist_called = False
+    monkeypatch.setattr(spark, sess._PERSIST_ATTR, [], raising=False)
+    frames = [sess.persist_scoped(spark.range(n + 1), slots=2) for n in range(3)]
+    try:
+        assert [f.is_cached for f in frames] == [False, True, True]
+        assert frames[0].storageLevel == StorageLevel.NONE
+        assert all(f.storageLevel != StorageLevel.NONE for f in frames[1:])
+        live = getattr(spark, sess._PERSIST_ATTR)
+        assert len(live) == 2
+        assert live[0] is frames[1] and live[1] is frames[2]
+    finally:
+        for f in frames:
+            f.unpersist()
 
-    @property
-    def sparkSession(self):  # noqa: N802 - PySpark attribute name
-        if self._probe_exc is not None:
-            raise self._probe_exc
-        raise AttributeError("no real session on a fake")
+
+class _FailingVictim:
+    """A slot entry whose ``unpersist`` fails."""
 
     def unpersist(self):
-        self.unpersist_called = True
-        if self._unpersist_exc is not None:
-            raise self._unpersist_exc
-
-    def persist(self):
-        return self
+        raise RuntimeError("executor OOM during unpersist")
 
 
-@pytest.fixture
-def clean_cache():
-    old = list(sess._LIVE_CACHE)
-    sess._LIVE_CACHE.clear()
-    yield sess._LIVE_CACHE
-    sess._LIVE_CACHE.clear()
-    sess._LIVE_CACHE.extend(old)
-
-
-def test_unexpected_probe_failure_still_unpersists(clean_cache):
-    victim = _FakeVictim(
-        probe_exc=RuntimeError("sparkContext is not supported in Connect")
+def test_unpersist_live_failure_propagates(spark, monkeypatch):
+    """A failing unpersist of the evicted frame propagates: swallowing it
+    would leak the executor-memory slot with no signal."""
+    monkeypatch.setattr(
+        spark, sess._PERSIST_ATTR, [_FailingVictim()], raising=False
     )
-    clean_cache.append(victim)
-    sess.persist_scoped(_FakeVictim(), slots=1)
-    assert victim.unpersist_called  # probe failure != dead session
-
-
-def test_stopped_context_probe_skips_unpersist(clean_cache):
-    victim = _FakeVictim(
-        probe_exc=RuntimeError(
-            "Cannot call methods on a stopped SparkContext"
-        )
-    )
-    clean_cache.append(victim)
-    sess.persist_scoped(_FakeVictim(), slots=1)
-    assert not victim.unpersist_called  # known dead signature: drop ref
-
-
-def test_unpersist_dead_signature_swallowed(clean_cache):
-    """Session died between probe and unpersist: same signature raised by
-    unpersist itself is swallowed (the cache is already gone)."""
-    victim = _FakeVictim(
-        probe_exc=RuntimeError("weird transient"),
-        unpersist_exc=RuntimeError("Answer from Java side is empty"),
-    )
-    clean_cache.append(victim)
-    sess.persist_scoped(_FakeVictim(), slots=1)
-    assert victim.unpersist_called
-
-
-def test_unpersist_live_failure_propagates(clean_cache):
-    victim = _FakeVictim(
-        probe_exc=RuntimeError("weird transient"),
-        unpersist_exc=RuntimeError("executor OOM during unpersist"),
-    )
-    clean_cache.append(victim)
     with pytest.raises(RuntimeError, match="executor OOM"):
-        sess.persist_scoped(_FakeVictim(), slots=1)
-
-
-def test_stopped_context_error_classifier():
-    assert sess._stopped_context_error(
-        RuntimeError("Cannot call methods on a stopped SparkContext")
-    )
-    assert sess._stopped_context_error(
-        Exception("py4j.protocol.Py4JNetworkError: ...")
-    )
-    assert not sess._stopped_context_error(RuntimeError("anything else"))
-
-
-def test_real_py4j_network_error_recognized_by_type():
-    """py4j does not put the class name in str(exc): a dead gateway's
-    Py4JNetworkError says only 'Error while sending or receiving'.
-    Recognize it by type and by its real message texts (round-7 review:
-    the first classifier only matched messages that artificially baked
-    the class name in)."""
-
-    class Py4JNetworkError(Exception):
-        pass
-
-    assert sess._stopped_context_error(
-        Py4JNetworkError("Error while sending or receiving")
-    )
-    assert sess._stopped_context_error(
-        Py4JNetworkError("whatever message")  # type alone suffices
-    )
-    assert sess._stopped_context_error(
-        RuntimeError(
-            "An error occurred while trying to connect to the Java server"
-        )
-    )
-
-
-def test_javapackage_typeerror_requires_dead_process(monkeypatch):
-    """"'JavaPackage' object is not callable" is a plain TypeError both
-    when the gateway is torn down AND on a live session missing a JVM
-    class; the message alone must not classify as dead (round-8 ADVICE —
-    the old substring match leaked a persisted slot on live sessions).
-    Death requires the independent no-active-SparkContext evidence."""
-    from pyspark import SparkContext
-
-    err = TypeError("'JavaPackage' object is not callable")
-    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
-    assert sess._stopped_context_error(err)
-    monkeypatch.setattr(SparkContext, "_active_spark_context", object())
-    assert not sess._stopped_context_error(err)
-    # the substring on a non-TypeError is not gateway evidence at all
-    assert not sess._stopped_context_error(
-        RuntimeError("JavaPackage mention in an unrelated error")
-    )
-
-
-def test_javapackage_typeerror_not_dead_on_live_connect_session(monkeypatch):
-    """A live Spark Connect session never sets a classic SparkContext,
-    so 'no active classic context' alone must not classify a
-    JavaPackage TypeError as session death there (round-9 ADVICE: doing
-    so drops the cached slot without unpersist on the live remote
-    session). The connect module is an optional install, so the test
-    injects a fake one."""
-    import sys
-    import types
-
-    from pyspark import SparkContext
-
-    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
-    err = TypeError("'JavaPackage' object is not callable")
-
-    fake_mod = types.ModuleType("pyspark.sql.connect.session")
-
-    class _FakeConnectSession:
-        _default_session = None
-        _live = None
-
-        @classmethod
-        def getActiveSession(cls):
-            return cls._live
-
-    fake_mod.SparkSession = _FakeConnectSession
-    monkeypatch.setitem(sys.modules, "pyspark.sql.connect.session", fake_mod)
-
-    # no classic context AND no connect session -> dead
-    assert sess._stopped_context_error(err)
-    # a live connect session (active OR default) -> NOT death evidence
-    _FakeConnectSession._live = object()
-    assert not sess._stopped_context_error(err)
-    _FakeConnectSession._live = None
-    _FakeConnectSession._default_session = object()
-    assert not sess._stopped_context_error(err)
+        sess.persist_scoped(spark.range(1), slots=1)
 
 
 def test_rebalance_is_noop_on_exchange_bearing_plans(spark):
@@ -207,41 +78,6 @@ def test_rebalance_is_noop_on_exchange_bearing_plans(spark):
     after = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
     # identity no-op must not have fired a single Spark job
     assert before == after
-
-
-def test_javapackage_classification_scoped_to_victim(monkeypatch):
-    """With a victim provided, the classifier scopes evidence to the
-    victim's own session kind (review finding: a live Connect session
-    elsewhere in the process must not suppress dead-classic
-    classification of a classic victim, and vice versa)."""
-    from pyspark import SparkContext
-
-    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
-    err = TypeError("'JavaPackage' object is not callable")
-
-    class _ClassicSession:
-        pass
-
-    class _Victim:
-        def __init__(self, session):
-            self._s = session
-
-        @property
-        def sparkSession(self):  # noqa: N802 - PySpark attribute name
-            if self._s is None:
-                raise RuntimeError("session unreachable")
-            return self._s
-
-    # classic victim: dead regardless of any Connect session elsewhere
-    assert sess._stopped_context_error(err, _Victim(_ClassicSession()))
-    # Connect-backed victim: JavaPackage is never its death signature
-    connect_session = type(
-        "SparkSession", (), {"__module__": "pyspark.sql.connect.session"}
-    )()
-    assert not sess._stopped_context_error(err, _Victim(connect_session))
-    # unreachable session falls back to process-level evidence (no
-    # classic context, connect module not importable here -> dead)
-    assert sess._stopped_context_error(err, _Victim(None))
 
 
 def test_rebalance_guard_matches_nodes_not_literals(spark):
@@ -312,39 +148,3 @@ def test_tune_shuffle_sets_dop_and_aqe_regime(spark):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved_dop)
         spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
-
-
-def test_restore_session_tuning_returns_pre_tuning_confs(spark, sf_dir):
-    """tune_shuffle_for_input's AQE/DOP latch is last-writer-wins on the
-    session (disclosed); restore_session_tuning must hand back the
-    values from BEFORE the first tuning touch (r13 ADVICE — mixed-use
-    sessions get their skew handling back without waiting for the next
-    engine load)."""
-    from financial_big_data_exp_4_spark.session import (
-        restore_session_tuning,
-        tune_shuffle_for_input,
-    )
-
-    from financial_big_data_exp_4_spark.session import (
-        _TUNE_ORIGINALS_MEMO_ATTR,
-    )
-
-    before_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    before_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        tune_shuffle_for_input(spark, sf_dir)  # tiny dir: flips AQE off
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        restore_session_tuning(spark)
-        # originals are FIRST-touch per session (an earlier test in this
-        # session may have tuned already) — restore must return exactly
-        # those, whatever this test saw before its own call
-        originals = getattr(spark, _TUNE_ORIGINALS_MEMO_ATTR)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == (
-            originals["spark.sql.shuffle.partitions"]
-        )
-        assert spark.conf.get("spark.sql.adaptive.enabled") == (
-            originals["spark.sql.adaptive.enabled"]
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", before_aqe)

@@ -428,7 +428,7 @@ def _longdocs_recall(spark, seed: int, keep: bool) -> dict:
       means the anchor selection broke on long texts.
     * anchored (``select_mod=2``) vs exhaustive (``select_mod=1``)
       signature cost, same session, interleaved, min of 3 warm passes
-      each (the tools/cc_ab.py discipline) — the number that decides
+      each (same-window A/B) — the number that decides
       whether the anchor's md5 halving is worth the fallback subtlety
       (round-11 prescription #5). All 16 mh columns are summed so
       column pruning cannot skip any permutation.
